@@ -257,20 +257,6 @@ def dot_chain(d: Dialect, a: str, b: str, dim: int) -> str:
     )
 
 
-def dot_chain_explicit(d: Dialect, a: str, b: str, dim: int) -> str:
-    """Explicit left-associated chain — identical evaluation order (and so
-    bit-identical doubles) to the fold above, but whole-stage-codegen-able.
-    Measured NOT worth it for pair-verify joins: inside a join projection
-    the 64-term chain tips generated code over the JIT budget → interpreted
-    fallback slower than the fold (17s vs 4.4s at sf0.1). Kept for narrow
-    scalar projections if ever needed."""
-    terms = [
-        f"({d.element(a, str(i))} * {d.element(b, str(i))})"
-        for i in range(1, dim + 1)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 def norm_chain(d: Dialect, a: str, dim: int) -> str:
     return f"sqrt({dot_chain(d, a, a, dim)})"
 

@@ -29,10 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _lits(vec: list[float]) -> str:
-    return ", ".join(repr(float(x)) for x in vec)
-
-
 def _argmin_dist_expr(vec: str, cents: list[list[float]], dim: int) -> str:
     """1-based index of the nearest centroid (squared Euclidean, explicit
     ``+``-chain — stays inside whole-stage codegen; HOF lambdas would not).

@@ -1924,14 +1924,6 @@ def decode_frames(
     return df.mapInPandas(run, schema=FRAME_DECODE_SCHEMA)
 
 
-def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Back-compat alias: video frame sampling WITH pixel decode — real
-    for Motion-JPEG MP4s and H.264 CAVLC I/IDR samples (see
-    decode_frames); P/B frames and other codecs report NULL pixel fields
-    (motion decode genuinely needs an av library)."""
-    return decode_frames(df, every_n)
-
-
 # ---------------------------------------------------------------------------
 # REAL stdlib WAV/RIFF PCM audio codec (public RIFF/WAVE spec: 'RIFF' size
 # 'WAVE' + 'fmt ' chunk with LE fields + 'data' chunk of raw samples).

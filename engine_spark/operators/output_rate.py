@@ -45,20 +45,6 @@ def last_every_n(
     )
 
 
-def first_every_interval(
-    df: DataFrame, ts_col: str, interval: str, partition_by: Sequence[str] = ()
-) -> DataFrame:
-    """OUTPUT FIRST EVERY d: earliest event per (key, time bucket)."""
-    w = Window.partitionBy(
-        *partition_by, F.window(F.col(ts_col), interval)
-    ).orderBy(F.col(ts_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def last_every_interval(
     df: DataFrame, ts_col: str, interval: str, partition_by: Sequence[str] = ()
 ) -> DataFrame:

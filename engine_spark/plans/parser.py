@@ -325,6 +325,9 @@ class Partition:
 # statement parsing
 # ---------------------------------------------------------------------------
 
+_BLOCK_END = re.compile(r"\bEND\s*$", re.IGNORECASE)
+
+
 def parse_app(text: str) -> list:
     """Parse a full application (list of CreateStream / Query / Partition)."""
     text = re.sub(r"--[^\n]*", "", text)  # line comments
@@ -351,9 +354,12 @@ def parse_app(text: str) -> list:
         elif up.startswith("CREATE STREAM") or up.startswith("CREATE TABLE"):
             out.append(_parse_create(stmt))
         elif up.startswith("PARTITION WITH") or up.startswith("PARTITION BY"):
-            # re-assemble the BEGIN … END block (it contained ';')
+            # re-assemble the BEGIN … END block (it contained ';') up to
+            # the piece that ends in the word END — rejoined pieces read
+            # `…;END`, so a whitespace-token test would swallow the blocks
+            # that follow
             block = stmt
-            while "END" not in block.upper().split() and idx < len(stmts):
+            while not _BLOCK_END.search(block) and idx < len(stmts):
                 block += ";" + stmts[idx]
                 idx += 1
             out.append(_parse_partition(block))

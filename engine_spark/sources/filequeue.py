@@ -7,9 +7,10 @@ publish, replay from offset, at-least-once delivery upgraded to
 exactly-once by an idempotent consumer — map directly onto Spark
 primitives:
 
-- **publish** appends an immutable segment file (tmp-write + atomic rename,
-  strictly-increasing segment ids and mtimes). A segment is the unit of
-  delivery, like an AMQP message batch.
+- **publish** appends an immutable segment file (written under
+  ``<path>/_staging``, outside the watched segment directory, then
+  atomically renamed in; strictly-increasing segment ids and mtimes). A
+  segment is the unit of delivery, like an AMQP message batch.
 - **source** = Spark's file stream over the segment directory. The
   checkpoint records which segments each epoch consumed, so a killed and
   restarted query resumes at the exact segment boundary — no loss, no
@@ -30,6 +31,8 @@ from __future__ import annotations
 
 import json
 import os
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -46,21 +49,31 @@ class FileQueue:
         final = os.path.join(self.segments, name)
         if os.path.exists(final):
             return final  # already delivered (idempotent re-publish)
-        tmp = final + ".tmp"
+        # staged outside the watched directory: the file source never
+        # lists a partially written segment
+        staging = os.path.join(self.path, "_staging")
+        os.makedirs(staging, exist_ok=True)
+        tmp = os.path.join(staging, name + ".tmp")
         with open(tmp, "w") as f:
             for r in rows:
                 f.write(json.dumps(r) + "\n")
+        # strictly-increasing mtimes at Hadoop's millisecond resolution,
+        # never back-dated: the file source orders segments by mtime
+        # (publish order = delivery order) and silently drops a file older
+        # than its newest seen file minus maxFileAge
+        newest = max(
+            (os.stat(os.path.join(self.segments, e)).st_mtime_ns
+             for e in os.listdir(self.segments)),
+            default=0,
+        )
+        t = max(time.time_ns(), newest + 1_000_000)
+        os.utime(tmp, ns=(t, t))
         os.rename(tmp, final)  # atomic: readers never see partial segments
-        # strictly-increasing mtimes: the file source orders same-tick
-        # segments by mtime, publish order must equal delivery order
-        n = len(os.listdir(self.segments))
-        t = 1_700_000_000 + n
-        os.utime(final, (t, t))
         return final
 
     def publish(self, rows: list[dict]) -> str:
         """Append one segment; returns its path."""
-        n = len([f for f in os.listdir(self.segments) if not f.endswith(".tmp")])
+        n = len(os.listdir(self.segments))
         return self._write_segment(f"seg-{n:06d}.jsonl", rows)
 
     def publish_epoch(self, rows: list[dict], epoch_id: int) -> bool:

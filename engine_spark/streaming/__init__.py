@@ -7,7 +7,8 @@ reference engine on Spark's micro-batch runtime.
   watermarks; count windows via keyed state).
 - ``nfa``      — per-key pattern NFA over ``applyInPandasWithState``
   (reference stream_pre_state_processor.rs / state machine ~6k LoC):
-  followed-by, count quantifier, absent-with-timeout.
+  followed-by chains (with absence, groups and quantified steps), count
+  quantifier, AND group.
 
 Batch vs streaming: every operator in engine_spark.operators has declared-
 equivalent batch semantics (verified by the DuckDB oracles); these modules

@@ -157,7 +157,9 @@ def test_hot_key_marker_file_scheme_roundtrip(spark, tmp_path):
         .withColumn("_is_a", F.col("etype") == "a")
         .withColumn("_is_b", F.col("etype") == "b")
     )
-    out = _auto_salt(df, "ts", "user", ["v"], hot_dir, r=4).collect()
+    out = _auto_salt(
+        df, "user", ["ts", "v"], hot_dir, 4, F.col("_is_b"), "_is_a"
+    ).collect()
     hot_b_salts = {r._salt for r in out if r.user == "hotk" and r.etype == "b" and r.v == 0.0}
     assert hot_b_salts == {0, 1, 2, 3}, "hot B events replicate to all sub-keys"
     assert {r._salt for r in out if r.user == "cold"} == {0}
@@ -179,7 +181,9 @@ def test_auto_salt_empty_registry_all_cold(spark, tmp_path):
         .withColumn("_is_a", F.col("etype") == "a")
         .withColumn("_is_b", F.col("etype") == "b")
     )
-    out = _auto_salt(df, "ts", "user", ["v"], str(tmp_path / "hk"), r=4).collect()
+    out = _auto_salt(
+        df, "user", ["ts", "v"], str(tmp_path / "hk"), 4, F.col("_is_b"), "_is_a"
+    ).collect()
     assert len(out) == 2 and {r._salt for r in out} == {0}
 
 

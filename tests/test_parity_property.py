@@ -1,11 +1,11 @@
 """Property-based batch ↔ streaming parity for the CEP core.
 
 The batch `pattern.followed_by` (relational join+rank) and the streaming
-`nfa.followed_by_stream` (per-key state machine) implement the SAME
-semantics by two completely different mechanisms. On any event sequence
-they must produce identical match sets — a far stronger statement than
-example-based tests, and the property the reference enforces implicitly by
-having only one engine.
+`nfa.chain_stream` (per-key state machine, the kernel live SQL PATTERN
+queries run) implement the SAME semantics by two completely different
+mechanisms. On any event sequence they must produce identical match sets
+— a far stronger statement than example-based tests, and the property
+the reference enforces implicitly by having only one engine.
 
 Hypothesis generates random event schedules (type, user, minute offsets);
 each example replays the stream in 1-3 micro-batch splits. Two schedule
@@ -92,16 +92,16 @@ def test_followed_by_batch_equals_streaming(spark, events, split):
             ]
         )
     r.run(
-        lambda sdf: nfa.followed_by_stream(
+        lambda sdf: nfa.chain_stream(
             sdf, "ts", "user",
-            first=F.col("etype") == "login",
-            second=F.col("etype") == "purchase",
-            within_seconds=within, value_col="v",
+            steps=[
+                ("e1", F.col("etype") == "login"),
+                ("e2", F.col("etype") == "purchase"),
+            ],
+            within_seconds=within, payload_cols=["v"],
         )
     )
-    stream_set = {
-        (m["user"], m["e1_value"], m["e2_value"]) for m in r.shutdown()
-    }
+    stream_set = {(m["user"], m["e1_v"], m["e2_v"]) for m in r.shutdown()}
 
     assert batch_set == stream_set
 
@@ -216,14 +216,14 @@ def test_absent_batch_equals_streaming(spark, events):
     r.send([{"ts": (T0 + timedelta(hours=5)).isoformat(), "user": "zz", "etype": "view", "v": 0.0}])
     r.send([{"ts": (T0 + timedelta(hours=6)).isoformat(), "user": "zz", "etype": "view", "v": 0.0}])
     r.run(
-        lambda sdf: nfa.absent_stream(
+        lambda sdf: nfa.chain_stream(
             sdf, "ts", "user",
-            first=F.col("etype") == "login",
-            absent=F.col("etype") == "purchase",
-            within_seconds=within, value_col="v",
+            steps=[("e1", F.col("etype") == "login")],
+            within_seconds=within, payload_cols=["v"],
+            absent_final=(F.col("etype") == "purchase", float(within)),
         )
     )
-    stream_set = {(m["user"], m["e1_value"]) for m in r.shutdown()}
+    stream_set = {(m["user"], m["e1_v"]) for m in r.shutdown()}
     assert stream_set == batch_set
 
 
@@ -638,14 +638,16 @@ def test_followed_by_ties_batch_equals_streaming(spark, events, split):
             ]
         )
     r.run(
-        lambda sdf: nfa.followed_by_stream(
+        lambda sdf: nfa.chain_stream(
             sdf, "ts", "user",
-            first=F.col("etype") == "login",
-            second=F.col("etype") == "purchase",
-            within_seconds=within, value_col="v",
+            steps=[
+                ("e1", F.col("etype") == "login"),
+                ("e2", F.col("etype") == "purchase"),
+            ],
+            within_seconds=within, payload_cols=["v"],
         )
     )
-    stream_set = {(m["user"], m["e1_value"], m["e2_value"]) for m in r.shutdown()}
+    stream_set = {(m["user"], m["e1_v"], m["e2_v"]) for m in r.shutdown()}
     assert batch_set == stream_set
 
 
@@ -681,14 +683,14 @@ def test_absent_ties_batch_equals_streaming(spark, events):
     r.send([{"ts": (T0 + timedelta(hours=5)).isoformat(), "user": "zz", "etype": "view", "v": 0.0}])
     r.send([{"ts": (T0 + timedelta(hours=6)).isoformat(), "user": "zz", "etype": "view", "v": 0.0}])
     r.run(
-        lambda sdf: nfa.absent_stream(
+        lambda sdf: nfa.chain_stream(
             sdf, "ts", "user",
-            first=F.col("etype") == "login",
-            absent=F.col("etype") == "purchase",
-            within_seconds=within, value_col="v",
+            steps=[("e1", F.col("etype") == "login")],
+            within_seconds=within, payload_cols=["v"],
+            absent_final=(F.col("etype") == "purchase", float(within)),
         )
     )
-    stream_set = sorted((m["user"], m["e1_value"]) for m in r.shutdown())
+    stream_set = sorted((m["user"], m["e1_v"]) for m in r.shutdown())
     assert stream_set == batch_set
 
 

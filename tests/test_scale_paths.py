@@ -87,11 +87,10 @@ def test_nfa_hot_key_throughput_floor(spark):
     r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
 
     def build(sdf):
-        return nfa.followed_by_stream(
+        return nfa.chain_stream(
             sdf, "ts", "user",
-            first=F.col("etype") == "a",
-            second=F.col("etype") == "b",
-            within_seconds=10, value_col="v",
+            steps=[("e1", F.col("etype") == "a"), ("e2", F.col("etype") == "b")],
+            within_seconds=10, payload_cols=["v"],
         )
 
     # run 1: pays JVM/streaming/python-worker startup (discarded).
@@ -155,11 +154,13 @@ def test_nfa_salted_matches_unsalted_exactly(spark):
 
     def build(salt):
         def b(sdf):
-            return nfa.followed_by_stream(
+            return nfa.chain_stream(
                 sdf, "ts", "user",
-                first=F.col("etype").isin("a", "ab"),
-                second=F.col("etype").isin("b", "ab"),
-                within_seconds=30, value_col="v", salt=salt,
+                steps=[
+                    ("e1", F.col("etype").isin("a", "ab")),
+                    ("e2", F.col("etype").isin("b", "ab")),
+                ],
+                within_seconds=30, payload_cols=["v"], salt=salt,
             )
         return b
 
@@ -171,7 +172,7 @@ def test_nfa_salted_matches_unsalted_exactly(spark):
         r.send(rows_[150:])
         r.run(build(salt))
         outs[salt] = sorted(
-            (m["user"], m["e1_ts"], m["e1_value"], m["e2_ts"], m["e2_value"])
+            (m["user"], m["e1_ts"], m["e1_v"], m["e2_ts"], m["e2_v"])
             for m in r.shutdown()
         )
     assert outs[4] == outs[None] and len(outs[None]) > 100
@@ -212,11 +213,10 @@ def test_nfa_auto_salt_marks_then_rekeys_next_batch(spark, tmp_path):
     )
 
     def build(sdf):
-        return nfa.followed_by_stream(
+        return nfa.chain_stream(
             sdf, "ts", "user",
-            first=F.col("etype") == "a",
-            second=F.col("etype") == "b",
-            within_seconds=3600, value_col="v",
+            steps=[("e1", F.col("etype") == "a"), ("e2", F.col("etype") == "b")],
+            within_seconds=3600, payload_cols=["v"],
             salt="auto", hot_key_dir=hot_dir, auto_salt_r=4,
             hot_threshold=20,
         )
@@ -229,18 +229,19 @@ def test_nfa_auto_salt_marks_then_rekeys_next_batch(spark, tmp_path):
     r.send(batch2)
     r.run(build)
     got = r.shutdown()
-    h = sorted(m["e1_value"] for m in got if m["user"] == "h")
-    c = [(m["e1_value"], m["e2_value"]) for m in got if m["user"] == "c"]
+    h = sorted(m["e1_v"] for m in got if m["user"] == "h")
+    c = [(m["e1_v"], m["e2_v"]) for m in got if m["user"] == "c"]
     # every one of the 29 h-opens (25 cold-batch + 4 hot-batch) matches the
     # single B exactly once — duplicates would mean B met a replicated A
     # role; misses would mean a sub-key lost state or B skipped sub-key 0
     assert h == sorted(float(x) for x in list(range(25)) + [100, 101, 102, 103])
-    assert all(m["e2_value"] == 999.0 for m in got if m["user"] == "h")
+    assert all(m["e2_v"] == 999.0 for m in got if m["user"] == "h")
     assert c == [(500.0, 888.0)]
 
 
 def test_nfa_auto_salt_chain_and_absent_match_unsalted(spark, tmp_path):
-    """salt='auto' on chain_stream and absent_stream: with a threshold low
+    """salt='auto' on chain_stream, as a 3-step chain and as a 1-step
+    chain with a final absence guard: with a threshold low
     enough that the busy key flips hot mid-stream, the match sets still
     equal the unsalted runs exactly (sticky membership + B-to-all-sub-keys
     keeps the transition exact)."""
@@ -276,11 +277,11 @@ def test_nfa_auto_salt_chain_and_absent_match_unsalted(spark, tmp_path):
 
     def absent_build(salt, hot_dir):
         def b(sdf):
-            return nfa.absent_stream(
+            return nfa.chain_stream(
                 sdf, "ts", "user",
-                first=F.col("etype") == "a",
-                absent=F.col("etype") == "b",
-                within_seconds=5, value_col="v",
+                steps=[("e1", F.col("etype") == "a")],
+                within_seconds=5, payload_cols=["v"],
+                absent_final=(F.col("etype") == "b", 5.0),
                 salt=salt, hot_key_dir=hot_dir, auto_salt_r=4,
                 hot_threshold=30,
             )
@@ -288,7 +289,7 @@ def test_nfa_auto_salt_chain_and_absent_match_unsalted(spark, tmp_path):
 
     for name, build_fn, keyf in (
         ("chain", chain_build, lambda m: (m["user"], m["e1_v"], m["e2_v"], m["e3_v"])),
-        ("absent", absent_build, lambda m: (m["user"], m["e1_value"])),
+        ("absent", absent_build, lambda m: (m["user"], m["e1_v"])),
     ):
         outs = {}
         for mode in ("none", "auto"):
@@ -308,13 +309,12 @@ def test_nfa_auto_salt_chain_and_absent_match_unsalted(spark, tmp_path):
 def test_nfa_salted_hot_key_throughput(spark):
     """The hot-key fix, measured: a 320k-event single hot key at a
     probe-heavy mix (2% B) through salt=16 sustains >150k events/s where
-    the unsalted path ceilings on one python worker (measured 149k on this
-    workload on a calm VM — and it trips the HOT_KEY_WARN_EVENTS executor
-    warning; heavier-emission workloads ceiling at the documented 70-90k,
-    PERF.md). Both arms are measured with the same startup-cost-isolating
+    the unsalted path ceilings on one python worker (and trips the
+    HOT_KEY_WARN_EVENTS executor warning; measured figures in PERF.md
+    round 6). Both arms are measured with the same startup-cost-isolating
     protocol as the floor test above; match sets must agree. The relative
-    bound (salted >= 1.8x unsalted) carries the claim when the VM is too
-    noisy for the calm-VM absolute number (~340k measured)."""
+    bound (salted >= 1.8x unsalted) carries the claim when the host is too
+    small or too noisy for the absolute number."""
     import time
 
     from engine_spark.streaming import nfa
@@ -337,11 +337,10 @@ def test_nfa_salted_hot_key_throughput(spark):
         )
 
         def build(sdf):
-            return nfa.followed_by_stream(
+            return nfa.chain_stream(
                 sdf, "ts", "user",
-                first=F.col("etype") == "a",
-                second=F.col("etype") == "b",
-                within_seconds=10, value_col="v", salt=salt,
+                steps=[("e1", F.col("etype") == "a"), ("e2", F.col("etype") == "b")],
+                within_seconds=10, payload_cols=["v"], salt=salt,
             )
 
         r.send(rows_[:20])
@@ -378,8 +377,9 @@ def test_nfa_salted_hot_key_throughput(spark):
 
 
 def test_nfa_salted_absent_matches_unsalted(spark):
-    """absent_stream(salt=R): A events hash to one sub-key, cancelling B
-    events replicate to all — identical emission set to unsalted."""
+    """Absence (`A -> NOT B FOR d`, a 1-step chain_stream with a final
+    absence guard) under salt=R: A events hash to one sub-key, cancelling
+    B events replicate to all — identical emission set to unsalted."""
     import time
 
     from engine_spark.streaming import nfa
@@ -402,25 +402,27 @@ def test_nfa_salted_absent_matches_unsalted(spark):
         for k in range(2)
     ]
 
+    def build(salt):
+        def b(sdf):
+            return nfa.chain_stream(
+                sdf, "ts", "user",
+                steps=[("e1", F.col("etype") == "a")],
+                within_seconds=20, payload_cols=["v"],
+                absent_final=(F.col("etype") == "b", 20.0), salt=salt,
+            )
+        return b
+
     outs = {}
     for salt in (None, 4):
         r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
         r.send(rows_[:150])
-        r.run(lambda sdf: nfa.absent_stream(
-            sdf, "ts", "user",
-            first=F.col("etype") == "a", absent=F.col("etype") == "b",
-            within_seconds=20, value_col="v", salt=salt,
-        ))
+        r.run(build(salt))
         r.send(rows_[150:])
         r.send([sentinel[0]])
         r.send([sentinel[1]])
-        r.run(lambda sdf: nfa.absent_stream(
-            sdf, "ts", "user",
-            first=F.col("etype") == "a", absent=F.col("etype") == "b",
-            within_seconds=20, value_col="v", salt=salt,
-        ))
+        r.run(build(salt))
         outs[salt] = sorted(
-            (m["user"], m["e1_ts"], m["e1_value"]) for m in r.shutdown()
+            (m["user"], m["e1_ts"], m["e1_v"]) for m in r.shutdown()
         )
     assert outs[4] == outs[None] and len(outs[None]) > 20
 

@@ -192,6 +192,44 @@ def test_file_queue_exactly_once_across_crash_and_restart(spark, tmp_path):
     assert got == [(1, 1.0), (2, 2.0), (3, 3.0), (4, 4.0)]
 
 
+def test_file_queue_mixed_publish_paths_deliver_every_row(spark, tmp_path):
+    """Driver-side ``publish`` and executor-side ``publish_epoch_distributed``
+    feeding one live stream: every row is delivered in publish order, also
+    the segments published after the consumer saw a current-dated epoch
+    (a back-dated segment mtime falls behind the file source's maxFileAge
+    horizon and is dropped without error), and no temporary file is ever
+    written into the watched segment directory."""
+    from engine_spark.sources.filequeue import FileQueue
+
+    q = FileQueue(str(tmp_path / "q"))
+    schema = "id long"
+    ckpt = str(tmp_path / "ckpt")
+    got: list[int] = []
+
+    def drain(name: str) -> None:
+        s = (
+            q.stream(spark, schema)
+            .writeStream.foreachBatch(
+                lambda b, _i: got.extend(r["id"] for r in b.collect())
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .queryName(name)
+            .start()
+        )
+        s.awaitTermination()
+
+    q.publish([{"id": 1}])
+    q.publish_epoch_distributed(spark.createDataFrame([(2,)], schema), 0)
+    drain("fq_mixed_1")
+    q.publish([{"id": 3}])
+    q.publish_epoch_distributed(spark.createDataFrame([(4,)], schema), 1)
+    q.publish([{"id": 5}])
+    drain("fq_mixed_2")
+    assert got == [1, 2, 3, 4, 5]
+    assert not [e for e in os.listdir(q.segments) if e.endswith(".tmp")]
+
+
 def test_file_queue_with_clause_registration(spark, tmp_path):
     """The WITH(...)-style registry exposes filequeue as a first-class
     source/sink extension."""

@@ -287,6 +287,30 @@ def test_partition_with_key(spark):
     assert rows(outs["Out"]) == [("x", 1.0), ("x", 3.0), ("y", 9.0)]
 
 
+def test_partition_two_consecutive_blocks(spark):
+    """Two ``PARTITION … BEGIN … END;`` blocks in one app text parse as two
+    partitions and both compile — the first block's END must close it
+    instead of swallowing the second block."""
+    text = """
+        PARTITION WITH (symbol OF In) BEGIN
+          INSERT INTO Out SELECT symbol, sum(price) AS s FROM In WINDOW('length', 2);
+        END;
+        PARTITION WITH (symbol OF In) BEGIN
+          INSERT INTO Big SELECT symbol, price FROM In WHERE price > 1.5;
+        END;
+        """
+    assert [[q.insert_into for q in p.queries] for p in parse_app(text)] == [
+        ["Out"], ["Big"],
+    ]
+    app = SqlApp(spark)
+    app.register_stream(
+        "In", spark.createDataFrame([("x", 1.0), ("x", 2.0), ("y", 9.0)], "symbol string, price double")
+    )
+    outs = app.sql(text)
+    assert rows(outs["Out"]) == [("x", 1.0), ("x", 3.0), ("y", 9.0)]
+    assert rows(outs["Big"]) == [("x", 2.0), ("y", 9.0)]
+
+
 def test_partition_with_range(spark):
     """Range partition (reference range_partition_type.rs /
     partition_type.rs:7-21): `cond AS 'label' OR cond AS 'label' OF S` —

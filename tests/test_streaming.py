@@ -47,23 +47,39 @@ def test_streaming_session_window(spark):
     assert ns[:2] == [1, 2]  # {12:00,12:01} session and {12:10} session
 
 
+def _login_then_purchase(df):
+    """`e1=login -> e2=purchase WITHIN 10 min` per user, payload ``v``."""
+    return nfa.chain_stream(
+        df, "ts", "user",
+        steps=[
+            ("e1", F.col("etype") == "login"),
+            ("e2", F.col("etype") == "purchase"),
+        ],
+        within_seconds=600, payload_cols=["v"],
+    )
+
+
+def _login_not_purchase(df, late="0 seconds"):
+    """`e1=login -> NOT purchase FOR 10 min` per user, payload ``v``."""
+    return nfa.chain_stream(
+        df, "ts", "user",
+        steps=[("e1", F.col("etype") == "login")],
+        within_seconds=600, payload_cols=["v"], late=late,
+        absent_final=(F.col("etype") == "purchase", 600.0),
+    )
+
+
 def test_nfa_followed_by_across_microbatches(spark):
     r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
     r.send([{"ts": _ts(0), "user": "u1", "etype": "login", "v": 1.0}])
     # B arrives in a LATER micro-batch — state must persist
     r.send([{"ts": _ts(2), "user": "u1", "etype": "purchase", "v": 9.0}])
-    r.run(
-        lambda df: nfa.followed_by_stream(
-            df, "ts", "user",
-            first=F.col("etype") == "login",
-            second=F.col("etype") == "purchase",
-            within_seconds=600, value_col="v",
-        )
-    )
+    r.run(_login_then_purchase)
     out = r.shutdown()
     assert len(out) == 1
     m = out[0]
-    assert (m["user"], m["e1_value"], m["e2_value"], m["delay_seconds"]) == (
+    delay_seconds = (m["e2_ts"] - m["e1_ts"]).total_seconds()
+    assert (m["user"], m["e1_v"], m["e2_v"], delay_seconds) == (
         "u1", 1.0, 9.0, 120.0
     )
 
@@ -72,14 +88,7 @@ def test_nfa_followed_by_respects_within(spark):
     r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
     r.send([{"ts": _ts(0), "user": "u1", "etype": "login", "v": 1.0}])
     r.send([{"ts": _ts(30), "user": "u1", "etype": "purchase", "v": 9.0}])
-    r.run(
-        lambda df: nfa.followed_by_stream(
-            df, "ts", "user",
-            first=F.col("etype") == "login",
-            second=F.col("etype") == "purchase",
-            within_seconds=600, value_col="v",
-        )
-    )
+    r.run(_login_then_purchase)
     assert r.shutdown() == []  # 30 min > WITHIN 10 min
 
 
@@ -90,17 +99,10 @@ def test_nfa_every_semantics_multiple_starts(spark):
         {"ts": _ts(1), "user": "u1", "etype": "login", "v": 2.0},
         {"ts": _ts(2), "user": "u1", "etype": "purchase", "v": 9.0},
     ])
-    r.run(
-        lambda df: nfa.followed_by_stream(
-            df, "ts", "user",
-            first=F.col("etype") == "login",
-            second=F.col("etype") == "purchase",
-            within_seconds=600, value_col="v",
-        )
-    )
+    r.run(_login_then_purchase)
     out = r.shutdown()
     # EVERY: both logins match the one purchase
-    assert sorted(m["e1_value"] for m in out) == [1.0, 2.0]
+    assert sorted(m["e1_v"] for m in out) == [1.0, 2.0]
 
 
 def test_nfa_absent_emits_after_timeout(spark):
@@ -114,17 +116,31 @@ def test_nfa_absent_emits_after_timeout(spark):
     r.send([{"ts": _ts(40), "user": "u3", "etype": "view", "v": 0.0}])
     # one more batch so the timeout fires after the watermark advanced
     r.send([{"ts": _ts(41), "user": "u3", "etype": "view", "v": 0.0}])
-    r.run(
-        lambda df: nfa.absent_stream(
-            df, "ts", "user",
-            first=F.col("etype") == "login",
-            absent=F.col("etype") == "purchase",
-            within_seconds=600, value_col="v",
-        )
-    )
+    r.run(_login_not_purchase)
     out = r.shutdown()
     # u1's login saw no purchase within 10 min → emitted; u2's was cancelled
-    assert [(m["user"], m["e1_value"]) for m in out] == [("u1", 1.0)]
+    assert [(m["user"], m["e1_v"]) for m in out] == [("u1", 1.0)]
+
+
+def test_chain_stream_absent_final_busy_key_waits_for_late_cancel(spark):
+    """A busy key must not flush a pending absence at its newest event
+    while ``late`` still admits a cancel inside the window: with late =
+    5 min the watermark after batch 1 is 12:06, so B@12:07 in batch 2 is
+    admitted and cancels A@12:00's 10-minute absence although X@12:11 in
+    batch 1 already passed the 12:10 deadline. u2's uncancelled login
+    still emits once the sentinels move the watermark past its deadline."""
+    r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
+    r.send([
+        {"ts": _ts(0), "user": "u1", "etype": "login", "v": 1.0},
+        {"ts": _ts(0), "user": "u2", "etype": "login", "v": 2.0},
+        {"ts": _ts(11), "user": "u1", "etype": "view", "v": 0.0},
+    ])
+    r.send([{"ts": _ts(7), "user": "u1", "etype": "purchase", "v": 9.0}])
+    r.send([{"ts": _ts(50), "user": "u3", "etype": "view", "v": 0.0}])
+    r.send([{"ts": _ts(51), "user": "u3", "etype": "view", "v": 0.0}])
+    r.run(lambda df: _login_not_purchase(df, late="5 minutes"))
+    out = r.shutdown()
+    assert [(m["user"], m["e1_v"]) for m in out] == [("u2", 2.0)]
 
 
 def test_length_batch_stream_partial_batch_carries(spark):
@@ -136,7 +152,11 @@ def test_length_batch_stream_partial_batch_carries(spark):
     ])
     # 2 more events: completes the second batch of 2 across micro-batches
     r.send([{"ts": _ts(3), "user": "u1", "v": 4.0}])
-    r.run(lambda df: nfa.length_batch_stream(df, "ts", "user", 2, "v"))
+    r.run(
+        lambda df: SW.sliding_stream(
+            df, "ts", "user", [("sum", "v", "sum_value")], "lengthbatch", 2
+        )
+    )
     out = r.shutdown()
     got = [(m["batch_id"], m["sum_value"]) for m in out]
     assert got == [(0, 3.0), (1, 7.0)]
@@ -187,20 +207,12 @@ def test_checkpoint_recovery_state_survives_restart(spark):
     r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
     r.send([{"ts": _ts(0), "user": "u1", "etype": "login", "v": 1.0}])
 
-    def build(df):
-        return nfa.followed_by_stream(
-            df, "ts", "user",
-            first=F.col("etype") == "login",
-            second=F.col("etype") == "purchase",
-            within_seconds=600, value_col="v",
-        )
-
-    r.run(build)          # query #1: processes the login, checkpoints state
+    r.run(_login_then_purchase)  # query #1: processes the login, checkpoints state
     assert r.collected == []
     r.send([{"ts": _ts(2), "user": "u1", "etype": "purchase", "v": 9.0}])
-    r.run(build)          # query #2: restored state must hold the open login
+    r.run(_login_then_purchase)  # query #2: restored state must hold the open login
     out = r.shutdown()
-    assert [(m["user"], m["e1_value"], m["e2_value"]) for m in out] == [("u1", 1.0, 9.0)]
+    assert [(m["user"], m["e1_v"], m["e2_v"]) for m in out] == [("u1", 1.0, 9.0)]
 
 
 def test_stream_stream_join_with_watermarks(spark):
@@ -242,18 +254,27 @@ def test_stream_stream_join_with_watermarks(spark):
 
 def test_time_sliding_stream_per_event_emission(spark):
     """Streaming time(d): every arrival emits the trailing-d aggregate,
-    expired events evicted — across micro-batches."""
+    expired events evicted — across micro-batches. The frame is closed at
+    its far end like the batch ``rangeBetween(-d, 0)``: an event exactly
+    d old still counts."""
     r = StreamRunner(spark, "ts timestamp, user string, v double")
     r.send([
         {"ts": _ts(0), "user": "u1", "v": 1.0},
         {"ts": _ts(1), "user": "u1", "v": 2.0},
     ])
     r.send([{"ts": _ts(10), "user": "u1", "v": 5.0}])  # 12:00/12:01 expired
-    r.run(lambda df: nfa.time_sliding_stream(df, "ts", "user", 120, "v"))
+    r.send([{"ts": _ts(12), "user": "u1", "v": 7.0}])  # 12:10 exactly d old
+    r.run(
+        lambda df: SW.sliding_stream(
+            df, "ts", "user",
+            [("count", None, "n"), ("sum", "v", "sum_value")], "time", 120,
+        )
+    )
     out = {str(m["ts"]): (m["n"], m["sum_value"]) for m in r.shutdown()}
     assert out["2026-01-01 12:00:00"] == (1, 1.0)
     assert out["2026-01-01 12:01:00"] == (2, 3.0)
     assert out["2026-01-01 12:10:00"] == (1, 5.0)  # trailing 2 min: alone
+    assert out["2026-01-01 12:12:00"] == (2, 12.0)  # frame boundary included
 
 
 def test_chain_stream_three_steps_across_microbatches(spark):
@@ -382,14 +403,14 @@ def test_logical_and_stream_pairs_both_orders(spark):
     r.send([{"ts": _ts(2), "user": "u1", "etype": "a", "v": 1.0}])
     r.send([{"ts": _ts(3), "user": "u1", "etype": "b", "v": 20.0}])
     r.run(
-        lambda df: nfa.logical_and_stream(
+        lambda df: nfa.logical_and_stream_payload(
             df, "ts", "user",
             first=F.col("etype") == "a",
             second=F.col("etype") == "b",
-            within_seconds=600, value_col="v",
+            within_seconds=600, payload_cols=["v"],
         )
     )
-    got = sorted((m["e1_value"], m["e2_value"]) for m in r.shutdown())
+    got = sorted((m["e1_v"], m["e2_v"]) for m in r.shutdown())
     assert got == [(1.0, 10.0), (1.0, 20.0)]
 
 
@@ -532,29 +553,20 @@ def test_persist_restore_named_revision_replays_state(spark):
     through the restored state (reference persist/restore_revision +
     WAL replay)."""
     r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
-
-    def build(df):
-        return nfa.followed_by_stream(
-            df, "ts", "user",
-            first=F.col("etype") == "login",
-            second=F.col("etype") == "purchase",
-            within_seconds=600, value_col="v",
-        )
-
     r.send([{"ts": _ts(0), "user": "u1", "etype": "login", "v": 1.0}])
-    r.run(build)  # state now holds the open login
+    r.run(_login_then_purchase)  # state now holds the open login
     r.persist("after-login")
 
     r.send([{"ts": _ts(2), "user": "u1", "etype": "purchase", "v": 9.0}])
-    r.run(build)
-    assert [(m["e1_value"], m["e2_value"]) for m in r.collected] == [(1.0, 9.0)]
+    r.run(_login_then_purchase)
+    assert [(m["e1_v"], m["e2_v"]) for m in r.collected] == [(1.0, 9.0)]
 
     # roll back: the purchase batch is no longer "consumed" and the open
     # login is live again — rerunning replays it and matches again
     r.restore("after-login")
     r.collected.clear()
-    r.run(build)
-    assert [(m["e1_value"], m["e2_value"]) for m in r.collected] == [(1.0, 9.0)]
+    r.run(_login_then_purchase)
+    assert [(m["e1_v"], m["e2_v"]) for m in r.collected] == [(1.0, 9.0)]
 
     from engine_spark.persistence import list_revisions
 
@@ -1220,7 +1232,7 @@ def test_auto_live_salt_same_plan_rekeys_after_marker(spark, tmp_path, monkeypat
         .withColumn("_is_b", F.col("etype") == "b")
     )
     plan = nfa._auto_salt(
-        tagged, "ts", "user", ["v"], hot, 4, live=True
+        tagged, "user", ["ts", "v"], hot, 4, F.col("_is_b"), "_is_a", live=True
     )  # built ONCE — reused below without rebuilding
     cold = plan.collect()
     assert len(cold) == 3 and {r._salt for r in cold} == {0}
@@ -1271,9 +1283,10 @@ def test_auto_live_salt_single_long_lived_query_exact(spark, tmp_path, monkeypat
         .option("maxFilesPerTrigger", "1")
         .json(str(indir))
     )
-    plan = nfa.followed_by_stream(
-        src, "ts", "user", F.col("etype") == "a", F.col("etype") == "b",
-        within_seconds=600, value_col="v",
+    plan = nfa.chain_stream(
+        src, "ts", "user",
+        steps=[("e1", F.col("etype") == "a"), ("e2", F.col("etype") == "b")],
+        within_seconds=600, payload_cols=["v"],
         salt="auto-live", hot_key_dir=hot, auto_salt_r=4,
     )
     got: list = []
@@ -1300,7 +1313,7 @@ def test_auto_live_salt_single_long_lived_query_exact(spark, tmp_path, monkeypat
             time.sleep(0.2)
     finally:
         q.stop()
-    matches = sorted((r.e1_value, r.e2_value) for r in got)
+    matches = sorted((r.e1_v, r.e2_v) for r in got)
     # exactly once per opened A, each taking the EARLIEST B — no fan-out
     # duplicates, no missed opens across the cold→hot re-key
     assert matches == [(0.0, 50.0), (1.0, 50.0), (2.0, 50.0)]
